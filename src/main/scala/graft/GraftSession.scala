@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Session bootstrap with scale-appropriate defaults.
   *
@@ -48,9 +54,21 @@ object GraftSession {
     * rejects; with `spark.sql.legacy.parquet.nanosAsLong=true` (set by
     * Verify/Bench/builder) it arrives as a nanosecond LongType, converted
     * here to TIMESTAMP_NTZ micros — `x div 1000` floor-truncation, the
-    * same losless-to-us conversion DuckDB applies, so oracles agree. */
+    * same losless-to-us conversion DuckDB applies, so oracles agree.
+    *
+    * Resolve-once: parquet schema inference runs one Spark job per read
+    * (the footer merge), so each table's schema is inferred once per
+    * FILE VERSION and later reads pass it to `spark.read.schema(..)`,
+    * which launches no job. An entry is keyed on the qualified path and
+    * the session's parquet-read confs (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*`, `spark.sql.caseSensitive` — they
+    * change what inference returns), and is valid only while the leaf
+    * files the read lists — each file's path, length and modification
+    * time — are exactly the ones it was inferred from; on any difference
+    * the read infers as before and replaces the entry. One entry per
+    * (path, confs) key, holding no session. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = resolvedParquet(spark, s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) { (d, f) =>
       // keyed on the table NAME too: only the driver's events fixture
       // carries TIMESTAMP(NANOS); a user table with a legitimate bigint
@@ -64,4 +82,43 @@ object GraftSession {
       else d
     }
   }
+
+  /** An inferred schema and the leaf files (path, length, mtime) it was
+    * inferred from. */
+  private final case class Resolved(files: Seq[(String, Long, Long)],
+                                    schema: StructType)
+
+  private val resolved =
+    new ConcurrentHashMap[(String, Map[String, String]), Resolved]()
+
+  private def resolvedParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val qualified =
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p)
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+      k.startsWith("spark.sql.legacy.parquet.") ||
+      k == "spark.sql.caseSensitive"
+    }
+    val key = (qualified.toString, confs)
+    Option(resolved.get(key))
+      .map(r => r -> spark.read.schema(r.schema).parquet(path))
+      .collect { case (r, df) if leafFiles(df).contains(r.files) => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        leafFiles(df).foreach(files =>
+          resolved.put(key, Resolved(files, df.schema)))
+        df
+      }
+  }
+
+  /** The leaf files a parquet read listed when it was created — the
+    * listing its scan reads, so no second listing is made. */
+  private def leafFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.collect { case ix: PartitioningAwareFileIndex =>
+      ix.allFiles().map(f =>
+        (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    }
 }

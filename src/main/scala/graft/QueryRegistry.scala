@@ -75,23 +75,31 @@ object QHelp {
     pmod(pmod(c, lit(2147483648L)) * 2654435761L, lit(4294967296L))
 
   /** EXACT integer floor division `⌊a / k⌋` for a positive literal k:
-    * `(a − pmod(a, k)) div k`. The numerator is the largest multiple
-    * of k ≤ a, so integral division's toward-zero truncation equals
-    * floor at ANY magnitude and sign — unlike `floor(a.cast(double) /
-    * k)`, which is only provably exact while |a| < 2^53·(safety
-    * margin), an argument every window/shard-id call site would
-    * otherwise have to carry. Stays in long arithmetic end to end
-    * (whole-stage codegen, no double round trip). */
-  def floorDiv(a: Column, k: Long): Column = {
-    require(k > 0, s"floorDiv: k must be positive, got $k")
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-      expression(a - pmod(a, lit(k))), expression(lit(k))))
-  }
+    * integral division's toward-zero quotient, minus one when the
+    * remainder (which takes a's sign) is negative. Exact at ANY
+    * magnitude and sign — unlike `floor(a.cast(double) / k)`, which is
+    * only provably exact while |a| < 2^53·(safety margin), an argument
+    * every window/shard-id call site would otherwise have to carry —
+    * and overflow-free at the Long extremes, where shifting a by up to
+    * k before dividing would wrap (or throw under ANSI). Stays in long
+    * arithmetic end to end (whole-stage codegen, no double round
+    * trip). */
+  def floorDiv(a: Column, k: Long): Column =
+    quotient(a, k) - when(a % lit(k) < 0L, 1L).otherwise(0L)
 
   /** EXACT integer ceiling division `⌈a / k⌉` for a positive literal
-    * k: [[floorDiv]] of (a + k − 1). */
-  def ceilDiv(a: Column, k: Long): Column = floorDiv(a + lit(k - 1L), k)
+    * k: the toward-zero quotient plus one when the remainder is
+    * positive. */
+  def ceilDiv(a: Column, k: Long): Column =
+    quotient(a, k) + when(a % lit(k) > 0L, 1L).otherwise(0L)
+
+  /** `a div k`, truncated toward zero. */
+  private def quotient(a: Column, k: Long): Column = {
+    require(k > 0, s"floorDiv/ceilDiv: k must be positive, got $k")
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+      expression(a), expression(lit(k))))
+  }
 
   /** Oracle-side decimal→double conversion, VARCHAR-mediated so DuckDB
     * rounds IDENTICALLY to Spark at ANY magnitude. Spark's cast is

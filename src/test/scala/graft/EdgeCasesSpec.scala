@@ -915,4 +915,89 @@ class EdgeCasesSpec extends SparkTestBase {
     }
     assert(fkey.getMessage.contains("integral"), fkey.getMessage)
   }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs `body` launches, counted by a listener. A marker job
+    * submitted afterwards bounds the count: the listener bus delivers in
+    * order, so once the marker's start arrives every earlier one has. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription("jobs-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      def next() = {
+        val d = started.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+        assert(d != null, "marker job start never delivered")
+        d
+      }
+      Iterator.continually(next()).takeWhile(_ != "jobs-marker").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("table: an overwrite at the same path re-resolves the schema") {
+    val dir = tmpDir("graft_table_overwrite")
+    kv((1L, "a", 1.0)).write.parquet(s"$dir/t.parquet")
+    assert(GraftSession.table(spark, dir, "t").columns.toSeq ==
+      Seq("id", "k", "v"))
+    kv((2L, "b", 2.0)).withColumn("extra", lit(7L))
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = GraftSession.table(spark, dir, "t")
+    assert(again.columns.toSeq == Seq("id", "k", "v", "extra"))
+    assert(again.collect().toSeq == Seq(Row(2L, "b", 2.0, 7L)))
+  }
+
+  test("table: the resolved events ts type follows nanosAsLong between reads") {
+    // the driver's events fixture shape: ts is TIMESTAMP(NANOS), which
+    // Spark writes never produce, so the file is written with parquet's
+    // own example writer
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmpDir("graft_table_nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L))
+    finally w.close()
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    def read() = GraftSession.table(spark, dir, "events")
+    assert(spark.conf.get(key) == "true")
+    assert(read().schema("ts").dataType == TimestampNTZType)
+    spark.conf.set(key, "false")
+    try {
+      val e = intercept[org.apache.spark.sql.AnalysisException](read())
+      assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
+    } finally spark.conf.set(key, "true")
+    val back = read()
+    assert(back.schema("ts").dataType == TimestampNTZType)
+    assert(back.collect().head.getAs[java.time.LocalDateTime]("ts") ==
+      java.time.LocalDateTime.parse("2023-11-14T22:13:20.123456"))
+  }
+
+  test("table: a second read of an unchanged file launches no Spark job") {
+    val dir = tmpDir("graft_table_jobs")
+    kv((1L, "a", 1.0), (2L, "b", 2.0)).write.parquet(s"$dir/t.parquet")
+    // the first read infers the schema (a footer-merge job) ...
+    assert(jobsLaunchedBy(GraftSession.table(spark, dir, "t")) > 0)
+    // ... the second reuses it
+    assert(jobsLaunchedBy(GraftSession.table(spark, dir, "t")) == 0)
+  }
 }
+

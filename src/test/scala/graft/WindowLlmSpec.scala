@@ -1779,7 +1779,10 @@ class WindowLlmSpec extends SparkTestBase {
     // exact boundaries (a double floor is safe here; the point is the
     // integer path lands the SAME values at every boundary)
     val bounds = Seq(-61L, -60L, -59L, -1L, 0L, 1L, 59L, 60L, 61L,
-      119L, 120L)
+      119L, 120L,
+      // the Long extremes: no intermediate may wrap (or throw under ANSI)
+      Long.MinValue, Long.MinValue + 1, -(1L << 62), 1L << 62,
+      Long.MaxValue - 1, Long.MaxValue)
     val got = bounds.toDF("a")
       .select(col("a"), graft.QHelp.floorDiv(col("a"), 60L).as("f"),
         graft.QHelp.ceilDiv(col("a"), 60L).as("c"))
@@ -1787,7 +1790,9 @@ class WindowLlmSpec extends SparkTestBase {
       .toMap
     bounds.foreach { a =>
       assert(got(a)._1 === java.lang.Math.floorDiv(a, 60L), s"floor $a")
-      assert(got(a)._2 === -java.lang.Math.floorDiv(-a, 60L), s"ceil $a")
+      // floorDiv + (remainder != 0): -floorDiv(-a) wraps at Long.MinValue
+      assert(got(a)._2 === java.lang.Math.floorDiv(a, 60L) +
+        (if (java.lang.Math.floorMod(a, 60L) != 0L) 1L else 0L), s"ceil $a")
     }
     // beyond 2^53 the double path provably misrounds: 9007199254740995
     // rounds to ...96 as a double, so floor(x/3.0) gives ...332 — the
