@@ -66,7 +66,9 @@ object GraftSession {
     * files the read lists — each file's path, length and modification
     * time — are exactly the ones it was inferred from; on any difference
     * the read infers as before and replaces the entry. One entry per
-    * (path, confs) key, holding no session. */
+    * (path, confs) key, holding no session. The cache lives in this JVM,
+    * so only a repeat read of an unchanged file version saves the job:
+    * the first read of each table in a process still infers. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = resolvedParquet(spark, s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) { (d, f) =>

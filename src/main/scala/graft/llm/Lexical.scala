@@ -79,8 +79,7 @@ object Lexical {
     // split because the alias is referenced twice and non-cheap.
     // Spread: regex tokenization is still the expensive per-byte stage —
     // widen sub-parallelism inputs (no-op at real file counts).
-    Spread(docs, target = 256L << 10,
-        confKey = "spark.graft.spread.tokenizeTargetBytes")
+    Spread(docs, target = 256L << 10)
       .select(col(idCol).as("doc_id"), toks.as("__toks__"))
       .select(col("doc_id"),
         coalesce(size(col("__toks__")), lit(0)).as("dl"),
@@ -96,10 +95,8 @@ object Lexical {
     * rewrite exact). */
   def docLengths(docs: DataFrame, idCol: String, textCol: String,
                  minTermLen: Int = 2): DataFrame =
-    Spread(docs, target = 256L << 10,
-        confKey = "spark.graft.spread.tokenizeTargetBytes")
-      .select(col(idCol).as("doc_id"),
-        coalesce(size(tokensOf(col(textCol), minTermLen)), lit(0)).as("dl"))
+    Spread(docs, target = 256L << 10).select(col(idCol).as("doc_id"),
+      coalesce(size(tokensOf(col(textCol), minTermLen)), lit(0)).as("dl"))
 
   /** Round-trip-exact double literal for oracle SQL: Scala's
     * Double.toString is shortest-round-trip, and VARCHAR→DOUBLE is

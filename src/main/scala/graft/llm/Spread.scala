@@ -37,10 +37,10 @@ private[graft] object Spread {
     * (r17, from the r16 advice): the call sites deliberately differ by
     * 64x in per-byte cost class, so one global conf silently
     * re-serializing the vector rankers while tuning text stages was a
-    * footgun — each cost class now has its own key
-    * (`spark.graft.spread.targetBytes` for the 2 MiB text-hash default,
-    * `...tokenizeTargetBytes` for Lexical's regex tokenize,
-    * `...vectorTargetBytes` for Similarity's batch rankers). */
+    * footgun — `spark.graft.spread.targetBytes` overrides the 2 MiB
+    * text-hash default and `...vectorTargetBytes` Similarity's batch
+    * rankers. Lexical's regex tokenize passes only its 256 KiB target,
+    * so the text-hash key overrides it too. */
   def apply(df: DataFrame, target: Long = 2L << 20,
             confKey: String = "spark.graft.spread.targetBytes"): DataFrame = {
     val sc = df.sparkSession.sparkContext

@@ -168,25 +168,4 @@ class LexicalSpec extends SparkTestBase {
       Lexical.rrfFuse(Seq("a" -> r0, "a" -> r0), "query_id", "doc_id", "rank", 5)
     }
   }
-
-  test("docLengths spreads by the tokenize key, not the text-hash key") {
-    // an in-memory frame has no input files, so Spread always picks a
-    // width: 1 at the tokenize default (a few bytes / 256 KiB), and up
-    // to the session's parallelism once the per-task target is 1 byte
-    val docs = docsDf(Seq(1L -> "alpha beta", 2L -> "gamma delta epsilon"))
-    def width(confs: String*): Option[Int] = {
-      confs.foreach(spark.conf.set(_, "1"))
-      try Lexical.docLengths(docs, "doc_id", "text").queryExecution
-        .analyzed.collectFirst {
-          case r: org.apache.spark.sql.catalyst.plans.logical.Repartition =>
-            r.numPartitions
-        }
-      finally confs.foreach(spark.conf.unset)
-    }
-    assert(spark.sparkContext.defaultParallelism > 1)
-    assert(width() == Some(1))
-    assert(width("spark.graft.spread.targetBytes") == Some(1))
-    assert(width("spark.graft.spread.tokenizeTargetBytes") ==
-      Some(spark.sparkContext.defaultParallelism))
-  }
 }
